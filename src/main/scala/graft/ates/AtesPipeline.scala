@@ -19,11 +19,13 @@ import graft.operators.Warnify
   * (`Promise.all`, FGU:285) then post-processes rows one at a time in JS;
   * here each table is one declarative branch (scan → filter → project →
   * feature/placemark string column), the decision-points branch inserts the
-  * warnify aggregation, and the union of branches is a single logical plan —
-  * Catalyst schedules the branches in parallel and pushes `area_id = k`
-  * into every scan. The only driver-side step is final document assembly
-  * (single-doc sinks are inherently driver-sized: one KML/GeoJSON document
-  * per request, O(10³) rows in the reference's own envelope).
+  * warnify aggregation, and a single-document request tags every branch and
+  * runs their union as one query: one collect, so Catalyst plans the
+  * request once, schedules the branches together and pushes `area_id = k`
+  * into every scan. The driver then orders the rows by (branch, id) and
+  * assembles the document (single-doc sinks are inherently driver-sized:
+  * one KML/GeoJSON document per request, O(10²-10³) rows in the reference's
+  * own envelope, where a Spark sort would cost a sampling job and a shuffle).
   */
 object AtesPipeline {
 
@@ -126,15 +128,22 @@ object AtesPipeline {
       .reduce(_.unionByName(_))
   }
 
+  /** Runs a union of tagged branches as one query and returns its `payload`
+    * strings in (`tag`, `id`) order. The sort runs on the driver and is
+    * stable, so rows that tie keep the order the query returned them in. */
+  private def collectOrdered(union: DataFrame, tag: String,
+      payload: String): Array[(Int, String)] =
+    union.select(col(tag), col("id"), col(payload)).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getString(2)))
+      .sortBy(r => (r._1, r._2))
+      .map(r => (r._1, r._3))
+
   /** EP2: the single FeatureCollection document (FGU:212-215, :291-294,
     * :362-368). Driver-side assembly in deterministic (qidx, id) order —
     * the engine form of the reference's query-array-then-row order. */
   def featureCollection(tables: Map[String, DataFrame], areaId: Long): String = {
-    val feats = geoJsonFeatures(tables, Some(areaId))
-      .orderBy(col("qidx"), col("id"))
-      .select(col("feature"))
-      .collect()
-      .map(_.getString(0))
+    val feats = collectOrdered(geoJsonFeatures(tables, Some(areaId)), "qidx",
+      "feature").map(_._2)
     s"""{"type":"FeatureCollection","features":[${feats.mkString(",")}]}"""
   }
 
@@ -266,20 +275,26 @@ object AtesPipeline {
   /** EP1: assemble the full KML document string (newDocument/newFolder
     * FGU:579-600; doc name = areas_vw first row name, FGU:610-612). The
     * reference appends Document `<name>` after folders and styles — we emit
-    * name first (valid-KML order; content identical). */
+    * name first (valid-KML order; content identical) and XML-escaped.
+    *
+    * One query per call: the doc-name lookup is tag 0 and folder `i` is tag
+    * `i + 1` of a single union, so each folder keeps its placemarks in
+    * ascending id and the folders keep their query order. */
   def kmlDocument(tables: Map[String, DataFrame], areaId: Long,
       lang: String = "en", iconNumber: Int = 11,
       iconDir: String = "files"): String = {
 
     val branches = kmlPlacemarks(tables, areaId)
-    // doc name = the area's name (FGU:610-612), one small lookup job
-    val docName = tables("areas_vw").filter(col("id") === areaId)
-      .select(col("name")).collect().headOption.map(_.getString(0))
-      .getOrElse("")
+    val nameRow = tables("areas_vw").filter(col("id") === areaId)
+      .select(col("id"), xmlEscape(col("name")).as("pm"))
+    val union = (nameRow +: branches.map(_._2)).zipWithIndex
+      .map { case (df, i) => df.select(lit(i).as("tag"), col("id"), col("pm")) }
+      .reduce(_.unionByName(_))
+    val byTag = collectOrdered(union, "tag", "pm").groupMap(_._1)(_._2)
 
-    val folders = branches.map { case (table, df) =>
-      val pms = df.orderBy(col("id")).select(col("pm"))
-        .collect().map(_.getString(0)).mkString
+    val docName = byTag.get(0).map(_.head).getOrElse("")
+    val folders = branches.zipWithIndex.map { case ((table, _), i) =>
+      val pms = byTag.getOrElse(i + 1, Array.empty[String]).mkString
       s"<Folder><name>${displayName(table, lang)}</name>$pms</Folder>"
     }.mkString
 

@@ -2,9 +2,11 @@ package graft.ates
 
 import java.io.ByteArrayOutputStream
 import java.net.InetSocketAddress
+import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.slf4j.LoggerFactory
 
 import graft.sinks.Sinks
 
@@ -17,21 +19,31 @@ import graft.sinks.Sinks
   * statement `$1` (`area_id === lit(areaId)`), each request runs the EP1
   * pipeline, and the zip streams back with the reference's
   * `attachment; filename=<areaId>.kmz` disposition (FGU:994). Input
-  * validation mirrors `returnIfIn`: lang ∉ {en, fr} → 'en' (FGU:963).
+  * validation mirrors `returnIfIn`: lang ∉ {en, fr} → 'en' (FGU:963); an
+  * id that is not a decimal `Long` → 404. A failed request answers a fixed
+  * `internal error` 500 and sends the exception to the log.
+  *
+  * Requests are dispatched on a fixed pool of
+  * `spark.sparkContext.defaultParallelism` threads, so up to that many
+  * requests run at once, each as one Spark query; `stop()` shuts the pool
+  * down.
   */
 class KmzHttpServer(spark: SparkSession, tables: Map[String, DataFrame],
     port: Int = 0) {
 
   private val Route = "^/([^/]+)/([0-9]+)\\.kmz$".r
+  private object AreaId { def unapply(s: String): Option[Long] = s.toLongOption }
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val log = LoggerFactory.getLogger(getClass)
+  private val pool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism)
+  server.setExecutor(pool)
 
   server.createContext("/", (ex: HttpExchange) => {
     try {
       ex.getRequestURI.getPath match {
         case "/" => respond(ex, 200, "help", "text/plain")
-        case Route(langRaw, areaIdStr) =>
+        case Route(langRaw, AreaId(areaId)) =>
           val lang = if (Seq("en", "fr").contains(langRaw)) langRaw else "en"
-          val areaId = areaIdStr.toLong
           val kml = AtesPipeline.kmlDocument(tables, areaId, lang)
           val bytes = new ByteArrayOutputStream()
           Sinks.writeKmz(kml, bytes)
@@ -45,7 +57,9 @@ class KmzHttpServer(spark: SparkSession, tables: Map[String, DataFrame],
         case _ => respond(ex, 404, "not found", "text/plain")
       }
     } catch {
-      case e: Throwable => respond(ex, 500, s"error: ${e.getMessage}", "text/plain")
+      case e: Throwable =>
+        log.error(s"${ex.getRequestMethod} ${ex.getRequestURI} failed", e)
+        respond(ex, 500, "internal error", "text/plain")
     }
   })
 
@@ -59,7 +73,7 @@ class KmzHttpServer(spark: SparkSession, tables: Map[String, DataFrame],
   }
 
   def start(): Int = { server.start(); server.getAddress.getPort }
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = { server.stop(0); pool.shutdown() }
 }
 
 /** CLI: serve the fixture tables — `runMain graft.ates.KmzHttpServerMain [port]`. */

@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.{col, desc, lit}
 import graft.ates.{AtesPipeline, Fixtures, Styles}
 import graft.sinks.Sinks
 
@@ -12,6 +16,35 @@ class AtesPipelineSpec extends SparkSpec {
 
   private lazy val tables = Fixtures.tables(spark)
   private val mapper = new ObjectMapper()
+
+  /** Runs `body` and counts the Spark jobs and SQL executions it started,
+    * by a job tag unique to this call. */
+  private def countWork[T](body: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"count-work-${java.util.UUID.randomUUID()}"
+    def tagged(tags: String) = Option(tags).exists(_.split(",").contains(tag))
+    val jobs = new AtomicInteger
+    val executions = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (tagged(e.properties.getProperty("spark.job.tags"))) jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobTags.contains(tag) =>
+          executions.incrementAndGet()
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      (out, jobs.get, executions.get)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("EP2: FeatureCollection for area 357 is valid GeoJSON with all branches") {
     val doc = AtesPipeline.featureCollection(tables, 357L)
@@ -67,6 +100,39 @@ class AtesPipelineSpec extends SparkSpec {
     // French display names
     val fr = AtesPipeline.kmlDocument(tables, 357L, "fr")
     assert(fr.contains("<name>Routes d'accès</name>"))
+  }
+
+  test("EP1: kmlDocument runs one SQL execution of at most 3 jobs") {
+    AtesPipeline.kmlDocument(tables, 357L) // first call pays for code generation
+    val (kml, jobs, executions) = countWork(AtesPipeline.kmlDocument(tables, 357L))
+    assert(kml.contains("<Document><name>Test Area</name>"))
+    assert(executions == 1, s"SQL executions: $executions")
+    assert(jobs >= 1 && jobs <= 3, s"Spark jobs: $jobs")
+  }
+
+  test("EP1: placemarks ascend by id inside every folder whatever the scan order") {
+    // every table scanned in descending id, so scan order is not the answer
+    val reversed = tables.map { case (t, df) =>
+      t -> df.orderBy(desc(if (t == "decision_points_warnings") "decision_point_id" else "id"))
+    }
+    val kml = AtesPipeline.kmlDocument(reversed, 357L, "en")
+    val folders = AtesPipeline.kmlPlacemarks(tables, 357L).map { case (t, df) =>
+      val pms = df.orderBy(col("id")).select(col("pm")).collect().map(_.getString(0))
+      s"<Folder><name>${AtesPipeline.displayName(t, "en")}</name>${pms.mkString}</Folder>"
+    }
+    assert(kml.contains(folders.mkString + "</Document>"))
+    assert(kml == AtesPipeline.kmlDocument(tables, 357L, "en"))
+  }
+
+  test("EP1: the Document name is XML-escaped and the KML parses") {
+    val named = tables.updated("areas_vw",
+      tables("areas_vw").withColumn("name", lit("a&b<c>")))
+    val kml = AtesPipeline.kmlDocument(named, 357L)
+    assert(kml.contains("<Document><name>a&amp;b&lt;c&gt;</name>"))
+    val doc = javax.xml.parsers.DocumentBuilderFactory.newInstance()
+      .newDocumentBuilder()
+      .parse(new java.io.ByteArrayInputStream(kml.getBytes("UTF-8")))
+    assert(doc.getElementsByTagName("name").item(0).getTextContent == "a&b<c>")
   }
 
   test("EP1: KMZ sink produces a readable zip with doc.kml (FGU:933-974)") {

@@ -3,10 +3,18 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import graft.ates.{Fixtures, KmzHttpServer}
+import graft.ates.{AtesPipeline, Fixtures, KmzHttpServer}
 
 /** In-process drive of the S9 HTTP surface (FGU:976-1009 behavior). */
 class HttpServerSpec extends SparkSpec {
+
+  private def docKml(kmz: Array[Byte]): String = {
+    val zin = new java.util.zip.ZipInputStream(new java.io.ByteArrayInputStream(kmz))
+    try {
+      assert(zin.getNextEntry.getName == "doc.kml")
+      new String(zin.readAllBytes(), "UTF-8")
+    } finally zin.close()
+  }
 
   test("GET /:lang/:areaId.kmz serves a KMZ attachment; routes validate") {
     val srv = new KmzHttpServer(spark, Fixtures.tables(spark), port = 0)
@@ -20,12 +28,7 @@ class HttpServerSpec extends SparkSpec {
       assert(ok.statusCode() == 200)
       assert(ok.headers().firstValue("Content-Disposition").get ==
         "attachment; filename=357.kmz")
-      val zin = new java.util.zip.ZipInputStream(
-        new java.io.ByteArrayInputStream(ok.body()))
-      val entry = zin.getNextEntry
-      assert(entry.getName == "doc.kml")
-      val kml = new String(zin.readAllBytes(), "UTF-8")
-      assert(kml.contains("<name>Test Area</name>"))
+      assert(docKml(ok.body()).contains("<name>Test Area</name>"))
 
       // invalid lang falls back to en (returnIfIn, FGU:963)
       val fallback = get("/zz/357.kmz")
@@ -34,6 +37,43 @@ class HttpServerSpec extends SparkSpec {
       // help root (FGU:985) and 404 on malformed ids
       assert(new String(get("/").body(), "UTF-8") == "help")
       assert(get("/en/notanumber.kmz").statusCode() == 404)
+      // an id past Long.MaxValue is no area either
+      assert(get("/en/99999999999999999999.kmz").statusCode() == 404)
+    } finally srv.stop()
+  }
+
+  test("concurrent GETs each serve the same bytes as a direct kmlDocument call") {
+    val tables = Fixtures.tables(spark)
+    val srv = new KmzHttpServer(spark, tables, port = 0)
+    val port = srv.start()
+    val client = HttpClient.newHttpClient()
+    try {
+      val reqs = for (_ <- 1 to 2; area <- Seq(357L, 358L); lang <- Seq("en", "fr"))
+        yield (area, lang)
+      val pending = reqs.map { case (area, lang) =>
+        client.sendAsync(
+          HttpRequest.newBuilder(
+            URI.create(s"http://localhost:$port/$lang/$area.kmz")).build(),
+          HttpResponse.BodyHandlers.ofByteArray())
+      }
+      val responses = pending.map(_.join())
+      reqs.zip(responses).foreach { case ((area, lang), resp) =>
+        assert(resp.statusCode() == 200, s"$lang/$area")
+        assert(docKml(resp.body()) == AtesPipeline.kmlDocument(tables, area, lang),
+          s"$lang/$area")
+      }
+    } finally srv.stop()
+  }
+
+  test("a failed request answers a fixed 500 body without the exception text") {
+    val srv = new KmzHttpServer(spark, Fixtures.tables(spark) - "zones", port = 0)
+    val port = srv.start()
+    try {
+      val resp = HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(URI.create(s"http://localhost:$port/en/357.kmz")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode() == 500)
+      assert(resp.body() == "internal error")
     } finally srv.stop()
   }
 
